@@ -86,6 +86,84 @@ def test_diff_states_null_transitions(spark):
     assert got == {(1, None, OP_UPDATE), (2, "y", OP_UPDATE)}
 
 
+def _three_branch_diff(old, new, pk):
+    """The earlier diff_states shape, kept as the reference: three
+    filtered branches over one full-outer join, unioned."""
+    value_cols = [c for c in old.columns if c not in pk]
+    o = old.select(*pk, F.struct(*value_cols).alias("__old"))
+    n = new.select(*pk, F.struct(*value_cols).alias("__new"))
+    j = o.join(n, pk, "full_outer")
+    old_v, new_v = F.col("__old"), F.col("__new")
+
+    def unpack(df, src, op):
+        cols = [*pk] + [F.col(f"{src}.{c}").alias(c) for c in value_cols]
+        return df.select(*cols).withColumn(OP_COL, F.lit(op))
+
+    return (
+        unpack(j.filter(old_v.isNull() & new_v.isNotNull()), "__new", OP_INSERT)
+        .unionByName(
+            unpack(
+                j.filter(old_v.isNotNull() & new_v.isNotNull() & ~old_v.eqNullSafe(new_v)),
+                "__new",
+                OP_UPDATE,
+            )
+        )
+        .unionByName(unpack(j.filter(new_v.isNull() & old_v.isNotNull()), "__old", OP_DELETE))
+    )
+
+
+def test_diff_states_one_join_matches_three_branch_reference(spark):
+    """The single-join diff emits exactly the rows, ops, payloads and
+    columns of the three-branch form on a mixed pair: inserts, deletes,
+    plain updates, value<->NULL transitions on either column, equal
+    rows (including equal NULLs) and a composite PK — in one join."""
+    schema = "a int, b string, v string, w double"
+    old = spark.createDataFrame(
+        [
+            (1, "x", "keep", 1.0),  # equal -> no row
+            (1, "y", "old", 2.0),  # plain update
+            (2, "x", "gone", 3.0),  # delete
+            (3, "x", None, 4.0),  # NULL -> value
+            (4, "x", "set", None),  # value -> NULL (second column)
+            (5, "x", None, None),  # equal NULLs -> no row
+            (6, "x", "del", None),  # delete with a NULL payload
+        ],
+        schema,
+    )
+    new = spark.createDataFrame(
+        [
+            (1, "x", "keep", 1.0),
+            (1, "y", "new", 2.0),
+            (3, "x", "filled", 4.0),
+            (4, "x", "set", 9.0),
+            (5, "x", None, None),
+            (7, "x", "ins", 7.0),  # insert
+            (8, "z", None, None),  # insert with a NULL payload
+        ],
+        schema,
+    )
+    pk = ["a", "b"]
+    delta = diff_states(old, new, pk)
+    ref = _three_branch_diff(old, new, pk)
+    assert delta.columns == [*ref.columns, SEQ_COL]
+    cols = ref.columns
+    got = sorted(tuple(r[c] for c in cols) for r in delta.collect())
+    want = sorted(tuple(r[c] for c in cols) for r in ref.collect())
+    assert got == want
+    assert {(r.a, r.b, r[OP_COL]) for r in delta.collect()} == {
+        (1, "y", OP_UPDATE),
+        (2, "x", OP_DELETE),
+        (3, "x", OP_UPDATE),
+        (4, "x", OP_UPDATE),
+        (6, "x", OP_DELETE),
+        (7, "x", OP_INSERT),
+        (8, "z", OP_INSERT),
+    }
+    assert len({r[SEQ_COL] for r in delta.collect()}) == len(want)
+    plan = delta._jdf.queryExecution().optimizedPlan().toString()
+    assert sum(line.lstrip(" :+-").startswith("Join ") for line in plan.splitlines()) == 1
+
+
 def test_diff_states_pk_only_relation(spark):
     """Tables whose every column is the PK still diff correctly (the
     presence marker must not be NULL)."""

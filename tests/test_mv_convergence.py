@@ -291,13 +291,22 @@ def test_crash_between_fact_and_mv_commit_recovers(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
+    "out_cols",
+    [
+        pytest.param(["k", "v"], id="view_has_pk"),
+        pytest.param(["v"], id="view_without_pk"),
+    ],
+)
+@pytest.mark.parametrize(
     "seed", [pytest.param(7, marks=pytest.mark.slow), 1234]
 )
-def test_topk_mv_converges_on_random_changelogs(spark, tmp_path, seed):
+def test_topk_mv_converges_on_random_changelogs(spark, tmp_path, seed, out_cols):
     """Top-k is non-invertible: deletes inside the top-k must promote
     successors, group-moves must re-rank both groups, and shrunk groups
     must drop orphaned rank slots. Assert MV == batch re-rank after
-    EVERY random batch."""
+    EVERY random batch — both when the view carries the fact PK (dirty
+    groups read off the view) and when it does not (dirty groups looked
+    up in the pre-batch fact version)."""
     from tiflink_spark.mv import IncrementalTopKMV
 
     K = 3
@@ -314,12 +323,17 @@ def test_topk_mv_converges_on_random_changelogs(spark, tmp_path, seed):
         fact_pk=["k"],
         group_key="g",
         order_col="v",
-        out_cols=["k", "v"],
+        out_cols=out_cols,
         k=K,
         work_dir=str(tmp_path / "mv"),
         num_buckets=4,
     )
+    with_pk = "k" in out_cols
+    assert (mv._view_pk is not None) == with_pk
     mv.bootstrap()
+
+    def row_of(r):
+        return (r.g, r.rank, r.k, r.v) if with_pk else (r.g, r.rank, r.v)
 
     def expected_topk(state):
         out = set()
@@ -329,7 +343,7 @@ def test_topk_mv_converges_on_random_changelogs(spark, tmp_path, seed):
         for g, rows in groups.items():
             rows.sort(key=lambda t: (-t[0], t[1]))
             for rank, (v, k) in enumerate(rows[:K], start=1):
-                out.add((g, rank, k, v))
+                out.add((g, rank, k, v) if with_pk else (g, rank, v))
         return out
 
     tracked = {k: (k % N_GROUPS, float(k)) for k in range(0, N_KEYS, 3)}
@@ -343,7 +357,7 @@ def test_topk_mv_converges_on_random_changelogs(spark, tmp_path, seed):
                 tracked.pop(k, None)
             else:
                 tracked[k] = (g, v)
-        got = {(r.g, r.rank, r.k, r.v) for r in mv.read().collect()}
+        got = {row_of(r) for r in mv.read().collect()}
         assert got == expected_topk(tracked), f"divergence after batch {i} (seed {seed})"
 
     # replaying the last batch (crash redelivery) changes nothing
@@ -351,7 +365,7 @@ def test_topk_mv_converges_on_random_changelogs(spark, tmp_path, seed):
         batches[-1], f"k int, g int, v double, {OP_COL} string, {SEQ_COL} long"
     )
     assert mv.refresh(last, batch_id=len(batches)) is False
-    got = {(r.g, r.rank, r.k, r.v) for r in mv.read().collect()}
+    got = {row_of(r) for r in mv.read().collect()}
     assert got == expected_topk(tracked)
 
 
@@ -465,3 +479,87 @@ def test_concurrent_overlap_gate_cached_on_mv(spark, tmp_path):
         work_dir=str(tmp_path / "c"),
     )
     assert count_mv._concurrent_ok is True
+
+
+@pytest.mark.parametrize(
+    "out_cols",
+    [pytest.param(["k", "v"], id="view_has_pk"), pytest.param(["v"], id="view_without_pk")],
+)
+def test_topk_refresh_finds_groups_only_old_rows_touch(spark, tmp_path, out_cols):
+    """Groups the batch touches only through their old top-k rows — a
+    delete whose row carries no group, a row moving out — must be
+    re-ranked, though no new row lands in them."""
+    from tiflink_spark.mv import IncrementalTopKMV
+
+    fact0 = spark.createDataFrame(
+        [(1, 0, 10.0), (2, 0, 20.0), (3, 0, 30.0), (4, 1, 5.0), (5, 1, 6.0), (6, 2, 1.0)],
+        "k int, g int, v double",
+    )
+    mv = IncrementalTopKMV(
+        spark,
+        fact=fact0,
+        fact_pk=["k"],
+        group_key="g",
+        order_col="v",
+        out_cols=out_cols,
+        k=2,
+        work_dir=str(tmp_path / "mv"),
+        num_buckets=4,
+    )
+    mv.bootstrap()
+    changes = spark.createDataFrame(
+        [(3, None, None, OP_DELETE, 0), (5, 2, 0.5, OP_UPDATE, 1)],
+        f"k int, g int, v double, {OP_COL} string, {SEQ_COL} long",
+    )
+    assert mv.refresh(changes, batch_id=1)
+    got = {(r.g, r.rank, r.v) for r in mv.read().collect()}
+    assert got == {(0, 1, 20.0), (0, 2, 10.0), (1, 1, 5.0), (2, 1, 1.0), (2, 2, 0.5)}
+
+
+def test_topk_refresh_job_count(spark, tmp_path):
+    """One top-k refresh on a view that carries the fact PK runs as one
+    diff plan: the fact merge, the target merge's diff, and no pre-batch
+    fact lookup or cached dirty set. Measured on the third batch, so
+    the fact store's reads reconcile a delta chain of two."""
+    from tiflink_spark.mv import IncrementalTopKMV
+
+    fact0 = spark.createDataFrame(
+        [(k, k % N_GROUPS, float(k)) for k in range(N_KEYS)],
+        "k int, g int, v double",
+    )
+    mv = IncrementalTopKMV(
+        spark,
+        fact=fact0,
+        fact_pk=["k"],
+        group_key="g",
+        order_col="v",
+        out_cols=["K", "v"],  # the view's PK spelling is matched case-insensitively
+        k=2,
+        work_dir=str(tmp_path / "mv"),
+        num_buckets=4,
+    )
+    assert mv._view_pk == ["K"]
+    mv.bootstrap()
+    rng = random.Random(5)
+    batches, _ = _random_batches(rng, n_batches=3)
+
+    def changes(rows):
+        return spark.createDataFrame(
+            rows, f"k int, g int, v double, {OP_COL} string, {SEQ_COL} long"
+        )
+
+    for i in (1, 2):
+        assert mv.refresh(changes(batches[i - 1]), batch_id=i)
+    assert len(mv.fact_store._commits()[-1]["deltas"]) == 2
+
+    sc = spark.sparkContext
+    group = f"topk-refresh-{id(mv):x}"
+    batch3 = changes(batches[2])
+    sc.setJobGroup(group, "top-k refresh job count")
+    try:
+        assert mv.refresh(batch3, batch_id=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= 6, f"top-k refresh ran {jobs} Spark jobs"

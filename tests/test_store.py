@@ -49,6 +49,43 @@ def test_delete_everything_leaves_empty_state(spark, store):
     assert set(out.columns) == {"k", "v"}  # schema survives emptiness
 
 
+def test_torn_manifest_tail_is_cut_before_the_next_commit(spark, tmp_path):
+    """A crash mid-append leaves a torn last manifest line. The replayed
+    batch's commit must not be glued onto it: after one more merge the
+    glued line would no longer be last, and every open would fail."""
+    path = str(tmp_path / "s")
+    store = KeyedParquetStore(spark, path, ["k"], num_buckets=4)
+    store.bootstrap(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    b1 = _changes(spark, [(1, "A", OP_UPDATE, 0), (3, "c", OP_INSERT, 1)])
+    b2 = _changes(spark, [(2, None, OP_DELETE, 0), (4, "d", OP_INSERT, 1)])
+    b3 = _changes(spark, [(3, "C", OP_UPDATE, 0)])
+    store.merge(b1, batch_id=1)
+    store.merge(b2, batch_id=2)
+
+    manifest = store._commits_path
+    with open(manifest, "rb") as f:
+        data = f.read()
+    last_start = data.rstrip(b"\n").rfind(b"\n") + 1
+    with open(manifest, "wb") as f:  # the crash: b2's line half-written
+        f.write(data[: last_start + (len(data) - last_start) // 2])
+
+    store = KeyedParquetStore(spark, path, ["k"], num_buckets=4)
+    assert 2 not in store.committed_batches()
+    assert store.merge(b2, batch_id=2) is True  # replay
+    store.merge(b3, batch_id=3)
+
+    store = KeyedParquetStore(spark, path, ["k"], num_buckets=4)
+    expected = {
+        0: {(1, "a"), (2, "b")},
+        1: {(1, "A"), (2, "b"), (3, "c")},
+        2: {(1, "A"), (3, "c"), (4, "d")},
+        3: {(1, "A"), (3, "C"), (4, "d")},
+    }
+    assert [c["version"] for c in store._commits()] == [0, 1, 2, 3]
+    for v, rows in expected.items():
+        assert {(r.k, r.v) for r in store.read(version=v).collect()} == rows
+
+
 def test_version_before_batch(spark, store):
     store.bootstrap(spark.createDataFrame([(1, "a")], "k int, v string"), batch_id=0)
     store.merge(_changes(spark, [(2, "b", OP_INSERT, 0)]), batch_id=7)

@@ -118,8 +118,11 @@ def diff_states(old: DataFrame, new: DataFrame, pk: list[str]) -> DataFrame:
     """Compute the changelog that transforms ``old`` into ``new``.
 
     Used by the recompute-mode MV to emit only the changed rows to the
-    sink (full-outer join on PK; rows equal in all columns produce no
-    change). Output carries ``__op``/``__seq``.
+    sink. ONE full-outer join on PK classifies every key with one CASE:
+    absent in ``old`` → +I, absent in ``new`` → -D, present in both and
+    different by the null-safe test → +U, equal → no row. Deletes carry
+    the old payload, inserts and updates the new one. Output carries
+    ``__op``/``__seq``.
     """
     value_cols = [c for c in old.columns if c not in pk]
     # PK-only relations: a TRUE literal is the presence marker (NULL would
@@ -130,28 +133,26 @@ def diff_states(old: DataFrame, new: DataFrame, pk: list[str]) -> DataFrame:
     n = new.select(*pk, F.struct(*value_cols).alias("__new")) if value_cols else new.select(
         *pk, F.lit(True).alias("__new")
     )
-    j = o.join(n, pk, "full_outer")
-    inserted = j.filter(F.col("__old").isNull() & F.col("__new").isNotNull())
-    deleted = j.filter(F.col("__new").isNull() & F.col("__old").isNotNull())
-    # NULL-SAFE inequality: plain `!=` on structs yields NULL (not
-    # true) when a field transitions value<->NULL, silently dropping
-    # exactly the updates outer-join views produce (a dim arrival
-    # filling a NULL payload, or a retraction re-NULLing it).
-    updated = j.filter(
-        F.col("__old").isNotNull()
-        & F.col("__new").isNotNull()
-        & ~F.col("__old").eqNullSafe(F.col("__new"))
+    # One join with the op decided per row. Filtering the join into
+    # three branches instead plans three joins, each re-running both
+    # inputs' lineage.
+    old_v, new_v = F.col("__old"), F.col("__new")
+    op = (
+        F.when(old_v.isNull(), F.lit(OP_INSERT))
+        .when(new_v.isNull(), F.lit(OP_DELETE))
+        # NULL-SAFE inequality: plain `!=` on structs yields NULL (not
+        # true) when a field transitions value<->NULL, silently dropping
+        # exactly the updates outer-join views produce (a dim arrival
+        # filling a NULL payload, or a retraction re-NULLing it).
+        .when(~old_v.eqNullSafe(new_v), F.lit(OP_UPDATE))
     )
-
-    def unpack(df: DataFrame, src: str, op: str) -> DataFrame:
-        cols = [*pk] + [F.col(f"{src}.{c}").alias(c) for c in value_cols]
-        return df.select(*cols).withColumn(OP_COL, F.lit(op))
-
-    out = (
-        unpack(inserted, "__new", OP_INSERT)
-        .unionByName(unpack(updated, "__new", OP_UPDATE))
-        .unionByName(unpack(deleted, "__old", OP_DELETE))
-    )
+    j = o.join(n, pk, "full_outer").withColumn(OP_COL, op).filter(F.col(OP_COL).isNotNull())
+    is_delete = F.col(OP_COL) == OP_DELETE
+    payload = [
+        F.when(is_delete, F.col(f"__old.{c}")).otherwise(F.col(f"__new.{c}")).alias(c)
+        for c in value_cols
+    ]
+    out = j.select(*pk, *payload, OP_COL)
     return out.withColumn(SEQ_COL, F.monotonically_increasing_id())
 
 

@@ -2133,10 +2133,18 @@ class IncrementalTopKMV:
     per-row delta exists. The reference's delegated planner handles the
     same case with full per-partition rank state (Flink RankOperator);
     here the fact store *is* that state, and maintenance is
-    dirty-GROUP recompute: a batch's touched groups (new rows' groups
-    plus displaced old rows' groups) are re-ranked from the fact store
-    pruned by semi-join, diffed against the old MV slots, and MERGEd.
-    Per-batch work ∝ row volume of touched groups, never the full fact.
+    dirty-GROUP recompute: a batch's touched groups are re-ranked from
+    the fact store pruned by semi-join, diffed against the old MV slots,
+    and MERGEd — one plan per batch. Per-batch work ∝ row volume of
+    touched groups, never the full fact.
+
+    A group's top-k changes only when a row enters it (the groups of
+    the batch's new rows) or when one of its current top-k rows changes
+    or leaves; a non-top-k row leaving changes nothing. When the view's
+    columns carry the fact PK, the second set is read off the view
+    itself: the MV rows whose PK is in the batch delta. Views without
+    the fact PK look up the displaced rows' groups in the pre-batch
+    fact version instead (:meth:`_dirty_groups`).
 
     MV rows are keyed (group, rank) — rank slots. A shrinking group
     leaves orphaned high-rank slots, which the diff emits as -D.
@@ -2183,6 +2191,13 @@ class IncrementalTopKMV:
                 raise ValueError("order_col or order_spec is required")
             self.order_spec = [(order_col, descending)]
         self.out_cols = out_cols
+        # The view's spelling of each fact PK column, or None when the
+        # view drops one. Matched case-insensitively, as the planner
+        # resolves names; the Top-N matcher admits only plain source
+        # columns, so a name match is the fact column itself.
+        by_lower = {c.lower(): c for c in out_cols or []}
+        view_pk = [by_lower.get(c.lower()) for c in fact_pk]
+        self._view_pk = view_pk if all(view_pk) else None
         self.k = k
         self.rank_col = rank_col
         self.fact_store = KeyedParquetStore(
@@ -2212,27 +2227,35 @@ class IncrementalTopKMV:
         self.fact_store.bootstrap(self.fact0, batch_id)
         self.target.bootstrap(self._topk(self.fact_store.read()), batch_id)
 
-    def _dirty_groups(self, changes: DataFrame, batch_id) -> DataFrame:
+    def _dirty_groups(self, changes: DataFrame, batch_id, mv_old: DataFrame) -> DataFrame:
         """Groups touched by the batch: the new rows' groups plus the
-        groups of the displaced old row versions (a group-changing
-        update dirties both). Called AFTER the batch's fact merge, so
-        the displaced-row lookup reads the pre-batch version BUCKET-
-        PRUNED to the batch's keys (batch_buckets) — O(touched
-        buckets), not a table scan."""
-        prev_v = self.fact_store.version_before_batch(batch_id)
-        bks = self.fact_store.batch_buckets(batch_id)
-        old = (
-            self.fact_store.read_buckets(
-                bks, prev_v,
-                key_filter=self.fact_store.batch_key_values(batch_id),
+        groups that lose a current top-k row (a group-changing update
+        dirties both). When the view carries the fact PK, those are the
+        groups of the old MV rows whose PK the batch changes. Otherwise
+        the displaced rows are looked up in the pre-batch fact version
+        (this runs AFTER the batch's fact merge), BUCKET-PRUNED to the
+        batch's keys (batch_buckets): O(touched buckets), not a table
+        scan."""
+        if self._view_pk is not None:
+            changed_pks = changes.select(
+                *[F.col(f).alias(v) for f, v in zip(self.fact_pk, self._view_pk)]
             )
-            if bks is not None
-            else self.fact_store.read(prev_v)
-        )
-        changed_pks = last_change_per_key(changes, self.fact_pk).select(*self.fact_pk)
-        old_groups = old.join(changed_pks, self.fact_pk, "left_semi").select(self.group_key)
+            old_groups = mv_old.join(changed_pks, self._view_pk, "left_semi")
+        else:
+            prev_v = self.fact_store.version_before_batch(batch_id)
+            bks = self.fact_store.batch_buckets(batch_id)
+            old = (
+                self.fact_store.read_buckets(
+                    bks, prev_v,
+                    key_filter=self.fact_store.batch_key_values(batch_id),
+                )
+                if bks is not None
+                else self.fact_store.read(prev_v)
+            )
+            changed_pks = last_change_per_key(changes, self.fact_pk).select(*self.fact_pk)
+            old_groups = old.join(changed_pks, self.fact_pk, "left_semi")
         new_groups = changes.select(self.group_key).where(F.col(self.group_key).isNotNull())
-        return old_groups.unionByName(new_groups).distinct()
+        return old_groups.select(self.group_key).unionByName(new_groups).distinct()
 
     @_maintenance
     def refresh(self, changes: DataFrame | None, batch_id) -> bool:
@@ -2247,13 +2270,16 @@ class IncrementalTopKMV:
             self.shuffle_partitions,
             self.fact_store.batch_change_rows(batch_id),
         )
-        dirty = self._dirty_groups(changes, batch_id).cache()
+        mv_old = self.target.read()
+        # Not cached: the dirty set is a small broadcast build side,
+        # and ReuseExchange shares it between the two semi-joins of the
+        # one diff plan — a cache would cost a job of its own.
+        dirty = self._dirty_groups(changes, batch_id, mv_old)
         sub = self.fact_store.read().join(dirty, self.group_key, "left_semi")
         recomputed = self._topk(sub)
-        mv_dirty_old = self.target.read().join(dirty, self.group_key, "left_semi")
+        mv_dirty_old = mv_old.join(dirty, self.group_key, "left_semi")
         mv_changes = diff_states(mv_dirty_old, recomputed, self.target.pk)
         self.target.merge(mv_changes, batch_id)
-        dirty.unpersist()
         return True
 
     def read(self, version: int | None = None) -> DataFrame:

@@ -280,9 +280,11 @@ def _minhash_sig_sql() -> str:
 
 
 def _band_keys_sql() -> str:
+    # The band index leads the key, as in the engine's xxhash64(..., b):
+    # without it a doc's band 0 would match another doc's band 1.
     rows = _MINHASH_K // _MINHASH_BANDS
     bands = ", ".join(
-        "md5(" + " || ".join(f"h{b * rows + r}" for r in range(rows)) + ")"
+        f"md5('{b}:' || " + " || ".join(f"h{b * rows + r}" for r in range(rows)) + ")"
         for b in range(_MINHASH_BANDS)
     )
     return f"bands AS (SELECT doc_id, unnest([{bands}]) AS band_key FROM sig)"
@@ -325,7 +327,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Band key = xxhash64 over the band's signature rows (+ band index):
     # an 8-byte long instead of a 32-char md5 hex string, so the bucket
     # grouping shuffles 4x fewer key bytes. Any injective keying of the
-    # row tuple yields the same buckets as the oracle's md5-of-concat
+    # (band index, row tuple) pair yields the same buckets as the
+    # oracle's md5 of the index-prefixed concat
     # (64-bit collision odds at 4·N band keys are ~N²/2^63 — negligible
     # at any tested sf).
     band_cols = [

@@ -113,6 +113,20 @@ TABLE_PKS: dict[str, list[str]] = {
 }
 
 
+MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half the
+    machine's physical memory, capped at 48g. A fixed 48g heap on a
+    small machine lets the JVM grow until the OS kills it."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError):
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{max(1024, min(MAX_DRIVER_MEMORY_MB, phys // 2 // 2**20))}m"
+
+
 def get_spark(app_name: str = "tiflink_spark", *, extra_conf: dict | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -126,7 +140,10 @@ def get_spark(app_name: str = "tiflink_spark", *, extra_conf: dict | None = None
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

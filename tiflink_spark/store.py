@@ -181,6 +181,15 @@ def _shared_fold_pool():
         return _FOLD_POOL
 
 
+def _truncate_torn_tail(f) -> None:
+    """Cut a manifest opened for binary append back to its last
+    newline: a tail without one is a commit line torn by a crash."""
+    f.seek(0)
+    data = f.read()
+    if not data.endswith(b"\n"):
+        f.truncate(data.rfind(b"\n") + 1)
+
+
 def _in_filter(col: str, vals):
     """``col IN (vals)`` (small sets) or ``col BETWEEN min AND max``
     (large sets) as ONE Catalyst expression. ``Column.isin`` builds a
@@ -414,8 +423,14 @@ class KeyedParquetStore:
             }
         )
         # Single append = atomic-enough commit point for one writer.
-        with open(self._commits_path, "a") as f:
-            f.write(line + "\n")
+        # A crash mid-append leaves a torn, newline-less tail that
+        # readers skip; appending onto it would glue this line to the
+        # fragment and, once another line follows, make the manifest
+        # unparseable. Merge, compact and vacuum await the fold first,
+        # so this writer is the only appender and may cut the tail.
+        with open(self._commits_path, "a+b") as f:
+            _truncate_torn_tail(f)
+            f.write((line + "\n").encode())
 
     # -- read ---------------------------------------------------------------
 
